@@ -201,7 +201,12 @@ object Session {
     base
   }
 
-  def build(appName: String, cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
+  /** `local[N]` session; N is `SPARK_GRAFT_CPUS` when set (a deployment
+    * setting), else the cores this JVM may use.
+    */
+  def build(appName: String,
+            cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+              Runtime.getRuntime.availableProcessors.toString)): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cpus]")

@@ -3,6 +3,7 @@ package graft.control
 import java.nio.file.{Files, Paths}
 import scala.util.Try
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.json4s._
 import org.json4s.jackson.Serialization
 
@@ -24,12 +25,15 @@ case class DatasetDef(
 }
 
 /** A source's single-cycle result (src/rabbit.js:51): the successor state
-  * plus the observation window each dataset produced this cycle.
+  * plus the observation window each dataset produced this cycle. `outputs`
+  * holds every produced layer as one long-format relation (`layer`,
+  * `variable`, `time`, `lat`, `lon`, `value`), `layer` being the dataset's
+  * `layerName`; None when the cycle produced no data.
   */
 case class ForageResult(
     newState: SourceState,
     observed: Map[String, (String, String)], // dataset name -> (start, end)
-    outputs: Map[String, DataFrame] = Map.empty)
+    outputs: Option[DataFrame] = None)
 
 /** The Source abstraction (SURVEY.md §1.1): one forage() per cycle, pure
   * with respect to injected state — the reference's
@@ -69,16 +73,20 @@ object Cycle {
 
     // data-plane outputs land first (partition overwrite is idempotent);
     // only then is state advanced — a retried cycle redoes the same month.
-    // With a binary layout configured, each layer additionally exports the
-    // reference's GeoTIFF-analog raster files (K1: .bin/.hdr/metadata.json
-    // per (variable, time), see [[graft.sources.RasterBinarySink]]).
-    if (writeOutputs) result.outputs.foreach { case (name, df) =>
-      graft.operators.Raster.writePartitioned(df, s"$rootDir/outputs/$name")
+    // With a binary layout configured, every layer additionally exports the
+    // reference's GeoTIFF-analog raster files in one pass (K1:
+    // .bin/.hdr/metadata.json/.tif per (layer, variable, time), see
+    // [[graft.sources.RasterBinarySink]]).
+    if (writeOutputs) result.outputs.foreach { layers =>
+      datasets.filter(d => result.observed.contains(d.name)).foreach { d =>
+        graft.operators.Raster.writePartitioned(
+          layers.where(col("layer") === d.layerName).drop("layer"),
+          s"$rootDir/outputs/${d.layerName}")
+      }
       // rasters land OUTSIDE the parquet dataset dir (a foreign subdir
       // would break Spark's partition discovery on read-back)
       binaryLayout.foreach { layout =>
-        graft.sources.RasterBinarySink
-          .write(df, s"$rootDir/rasters/$name", layout).collect()
+        graft.sources.RasterBinarySink.write(layers, s"$rootDir/rasters", layout).collect()
       }
     }
 

@@ -10,7 +10,8 @@ import graft.operators.Raster
   * dataset either unit-convert (plain layers) or subtract the memoized
   * climatology normal (anomaly layers). One grid slice serves every dataset
   * of the source — the reference's one-download-many-datasets share
-  * (era5monthly.js:46-60) becomes a cached DataFrame.
+  * (era5monthly.js:46-60) becomes a cached DataFrame — and the datasets'
+  * layers come back as one relation keyed by a `layer` column.
   */
 final class GridSource(grid: DataFrame, rootDir: String,
                        firstMonth: String = "1995-01-01T00:00:00.000Z",
@@ -43,9 +44,7 @@ final class GridSource(grid: DataFrame, rootDir: String,
         return ForageResult(state.copy(date = Some(cursorIso)), Map.empty)
 
       var st = state
-      val outputs = Map.newBuilder[String, DataFrame]
-      val observed = Map.newBuilder[String, (String, String)]
-      datasets.foreach { d =>
+      val layers = datasets.map { d =>
         val slice = monthSlice.where(col("variable") === d.variable)
         val out =
           if (!d.anomaly) {
@@ -61,16 +60,20 @@ final class GridSource(grid: DataFrame, rootDir: String,
             st = st2
             keepalive() // the normal build is the cycle's long pole, as in T4
             slice.join(broadcast(normal), Seq("lat", "lon"))
-              .select(col("variable"), col("time"), col("lat"), col("lon"),
-                      (col("value") - col("normal")).as("value"))
+              .withColumn("value", col("value") - col("normal"))
           }
-        // Materialize each layer eagerly (the service loop writes layers out
-        // anyway) so the cached slice can be dropped before returning —
-        // otherwise cached blocks accumulate across scheduler cycles.
-        outputs += d.layerName -> out.localCheckpoint(true)
-        observed += d.name -> ((cursorIso, cursorIso))
+        out.select(lit(d.layerName).as("layer"), col("variable"), col("time"), col("lat"),
+          col("lon"), col("value"))
       }
-      ForageResult(st.copy(date = Some(cursorIso)), observed.result(), outputs.result())
+      // Materialize every layer at once, so the cached slice can be dropped
+      // before returning (otherwise cached blocks accumulate across
+      // scheduler cycles) at the cost of one job. The union has one
+      // partition set per layer; coalescing back to the slice's count keeps
+      // the cycle's later scans at that many tasks.
+      val outputs = layers.reduceOption(_ unionByName _).map(
+        _.coalesce(monthSlice.rdd.getNumPartitions).localCheckpoint(true))
+      val observed = datasets.map(d => d.name -> ((cursorIso, cursorIso))).toMap
+      ForageResult(st.copy(date = Some(cursorIso)), observed, outputs)
     } finally monthSlice.unpersist()
   }
 }

@@ -22,18 +22,21 @@ object Normals {
                    grid: DataFrame, variable: String, calMonth: Int,
                    startYear: Int = 1991, endYear: Int = 2020): (DataFrame, SourceState) = {
     val monthKey = f"$calMonth%02d"
+    val normal = graft.operators.Raster
+      .climatologyNormal(grid, variable, calMonth, startYear, endYear)
+    // the persisted file holds exactly this plan's output, so reading it
+    // with the analyzed schema skips the footer-inference job
+    def read(path: String) = spark.read.schema(normal.schema).parquet(path)
     state.normals.get(variable).flatMap(_.get(monthKey)) match {
       case Some(path) if Files.exists(Paths.get(path)) =>
-        (spark.read.parquet(path), state)
+        (read(path), state)
       case _ =>
         val path = s"$normalsDir/$variable/$monthKey"
-        graft.operators.Raster
-          .climatologyNormal(grid, variable, calMonth, startYear, endYear)
+        normal
           .coalesce(1) // one small grid — a single file broadcasts cleanly
           .write.mode("overwrite").parquet(path)
         val varMap = state.normals.getOrElse(variable, Map.empty) + (monthKey -> path)
-        (spark.read.parquet(path),
-         state.copy(normals = state.normals + (variable -> varMap)))
+        (read(path), state.copy(normals = state.normals + (variable -> varMap)))
     }
   }
 }

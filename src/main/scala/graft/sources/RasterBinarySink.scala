@@ -16,7 +16,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
   * era5monthly.js:27-34 + `-dstnodata -9999`,
   * file-conversions.js:183-184).
   *
-  * Scale shape: one task per layer — `groupByKey` on (variable, time)
+  * Scale shape: one task per layer — `groupByKey` on ([layer,] variable, time)
   * shuffles each layer's cells to one executor, which materializes the
   * dense W×H Float32 array (a 0.25° global ERA5 grid is 1440×721×4 B ≈
   * 4 MB — executor-trivial) and writes the three files straight to the
@@ -42,33 +42,42 @@ object RasterBinarySink {
     * manifest (variable, time, path, width, height, n_cells) as a
     * DataFrame; the action is the manifest's evaluation (call `.collect()`
     * or let the caller aggregate it).
+    *
+    * A grid with a `layer` column exports several named layers in one
+    * pass: the group key becomes (layer, variable, time) and each layer's
+    * files land in `outDir/<layer>/`. Without that column the files land
+    * in `outDir` itself.
     */
   def write(grid: DataFrame, outDir: String, layout: Layout,
             nodata: Float = DefaultNodata): DataFrame = {
     val width = layout.width
     val height = layout.height
     Files.createDirectories(Paths.get(outDir))
-    val rows = grid.selectExpr("CAST(variable AS STRING) AS variable",
+    val layer = if (grid.columns.contains("layer")) "layer" else "NULL"
+    val rows = grid.selectExpr(s"CAST($layer AS STRING) AS layer",
+      "CAST(variable AS STRING) AS variable",
       "CAST(time AS STRING) AS time", "CAST(lat AS DOUBLE) AS lat",
       "CAST(lon AS DOUBLE) AS lon", "CAST(value AS DOUBLE) AS value")
     rows
-      .groupByKey(r => (r.getString(0), r.getString(1)))(
-        Encoders.tuple(Encoders.STRING, Encoders.STRING))
-      .mapGroups { (key: (String, String), cells: Iterator[Row]) =>
-        val (variable, time) = key
+      .groupByKey(r => (r.getString(0), r.getString(1), r.getString(2)))(
+        Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.STRING))
+      .mapGroups { (key: (String, String, String), cells: Iterator[Row]) =>
+        val (layer, variable, time) = key
         val arr = Array.fill(width * height)(nodata)
         var n = 0
         cells.foreach { r =>
-          val row = math.round((layout.latMax - r.getDouble(2)) / layout.cell).toInt
-          val col = math.round((r.getDouble(3) - layout.lonMin) / layout.cell).toInt
-          if (row >= 0 && row < height && col >= 0 && col < width && !r.isNullAt(4)) {
-            arr(row * width + col) = r.getDouble(4).toFloat
+          val row = math.round((layout.latMax - r.getDouble(3)) / layout.cell).toInt
+          val col = math.round((r.getDouble(4) - layout.lonMin) / layout.cell).toInt
+          if (row >= 0 && row < height && col >= 0 && col < width && !r.isNullAt(5)) {
+            arr(row * width + col) = r.getDouble(5).toFloat
             n += 1
           }
         }
+        val dir = if (layer == null) outDir else s"$outDir/$layer"
+        Files.createDirectories(Paths.get(dir))
         val base = s"${variable}_${time.replaceAll("[^0-9A-Za-z]+", "-")}"
-        writeLayer(outDir, base, arr, layout, nodata)
-        LayerManifest(variable, time, s"$outDir/$base.bin", width, height, n.toLong)
+        writeLayer(dir, base, arr, layout, nodata)
+        LayerManifest(variable, time, s"$dir/$base.bin", width, height, n.toLong)
       }(Encoders.product[LayerManifest])
       .toDF()
   }
@@ -107,8 +116,10 @@ object RasterBinarySink {
          | "layout": "row-major north-to-south"}""".stripMargin.replace("\n", "")
     atomicWrite(s"$outDir/$base.metadata.json", meta.getBytes(StandardCharsets.UTF_8))
     // the reference's literal downstream contract is a .tif per layer
-    // (file-conversions.js:57-74) — emit a real uncompressed GeoTIFF
-    // alongside the ENVI pair, same grid, same nodata
+    // (file-conversions.js:57-74) — emit a real GeoTIFF, LZW with the
+    // floating-point predictor as `gdal_translate -co COMPRESS=LZW
+    // -co PREDICTOR=3` writes it, alongside the ENVI pair, same grid,
+    // same nodata
     atomicWrite(s"$outDir/$base.tif", GeoTiff.encode(
       layout.width, layout.height, arr,
       layout.lonMin - layout.cell / 2, layout.latMax + layout.cell / 2,

@@ -72,6 +72,31 @@ class CycleSpec extends SparkSpec {
     Files.getLastModifiedTime(normalFile) shouldBe mtime
   }
 
+  test("a cycle whose normals are memoized runs a fixed number of Spark jobs") {
+    implicit val s = spark
+    val root = Files.createTempDirectory("graft-cycle-jobs").toString
+    val grid = Raster.demoGrid(table("lineitem")).cache()
+    val layout = graft.sources.RasterBinarySink.Layout(
+      latMin = -10.0, latMax = 9.0, lonMin = -15.0, lonMax = 14.0)
+    def cycle(): SourceState = Cycle.run(root, new GridSource(grid, root), registry,
+      new VirtualClock(), writeOutputs = true, binaryLayout = Some(layout)).get
+    // the first cycle memoizes January's normal; rewinding the cursor makes
+    // the second cycle redo January with that normal on disk
+    val st = cycle()
+    StateStore.writeJsonAtomic(s"$root/state/grid.json", st.copy(date = None))
+
+    val sc = spark.sparkContext
+    val group = s"cycle-jobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, group)
+    try cycle() finally sc.clearJobGroup()
+    org.apache.spark.ListenerBusDrain(sc)
+    // the slice's cache stage and emptiness test 2, the normal's broadcast
+    // 1, the layers' checkpoint 1, each layer's parquet write 2 + 2, the
+    // raster export of every layer 2; a memoized normal costs no job
+    sc.statusTracker.getJobIdsForGroup(group).length shouldBe 10
+    grid.unpersist()
+  }
+
   test("anomaly output equals slice minus memoized normal") {
     implicit val s = spark
     val root = Files.createTempDirectory("graft-cycle2").toString

@@ -38,6 +38,19 @@ class GeoTiffLzwSpec extends AnyFunSuite with Matchers {
     GeoTiff.Lzw.compress(Array.fill(10000)(7.toByte)).length should be < 1000
   }
 
+  test("LZW round-trips every prefix length 0..4096 of a noisy buffer") {
+    // the last data code can fill the decoder's table to 2^w − 1, so the
+    // decoder widens before it reads EOI; some prefix length hits that
+    // for each of the 9/10/11-bit widths
+    val buf = noisyBytes(4096)
+    (0 to buf.length).foreach { n =>
+      val in = java.util.Arrays.copyOf(buf, n)
+      withClue(s"prefix $n: ") {
+        GeoTiff.Lzw.decompress(GeoTiff.Lzw.compress(in)).toSeq shouldBe in.toSeq
+      }
+    }
+  }
+
   test("stream structure: starts with ClearCode, ends with EOI") {
     val packed = GeoTiff.Lzw.compress("abcabc".getBytes("US-ASCII"))
     // first 9 bits must be 256 (ClearCode): 1 0000 0000 → byte0 = 0x80

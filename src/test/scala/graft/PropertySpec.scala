@@ -158,15 +158,31 @@ class PropertySpec extends SparkSpec {
   test("GeoContains kernel equals Geo.containsMulti on random rings and points") {
     import graft.functions.GeoContains
     val coord = Gen.chooseNum(-50.0, 50.0)
+    // small integer coordinates repeat, which makes horizontal edges and
+    // queries on a vertex latitude common
+    val lattice = Gen.chooseNum(-4, 4).map(_.toDouble)
+    val either = Gen.oneOf(coord, lattice)
     val ringGen: Gen[Geo.Ring] = for {
       n <- Gen.chooseNum(3, 12)
-      pts <- Gen.listOfN(n, Gen.zip(coord, coord))
+      pts <- Gen.listOfN(n, Gen.zip(either, either))
     } yield (pts :+ pts.head).toArray
-    check(Prop.forAll(Gen.listOfN(3, ringGen), coord, coord) {
-      (rings: List[Geo.Ring], lon: Double, lat: Double) =>
-        val (xs, ys, starts) = GeoContains.flatten(rings)
-        GeoContains.inside(xs, ys, starts, lon, lat) ==
-          Geo.containsMulti(rings)(lon, lat)
+    // every vertex on one latitude: a zero-height ring set has no edge
+    val flatRing: Gen[Geo.Ring] = for {
+      y <- either
+      xs <- Gen.listOfN(4, coord)
+    } yield (xs :+ xs.head).map((_, y)).toArray
+    val ringSet = Gen.frequency(
+      6 -> Gen.chooseNum(1, 3).flatMap(Gen.listOfN(_, ringGen)),
+      1 -> Gen.listOfN(2, flatRing))
+    val special = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    check(Prop.forAll(ringSet, Gen.listOfN(6, coord)) {
+      (rings: List[Geo.Ring], extra: List[Double]) =>
+        val index = GeoContains.index(rings)
+        val lats = rings.flatMap(_.map(_._2)) ++ index.bandBoundaries.flatMap(y =>
+          Seq(Math.nextDown(y), y, Math.nextUp(y))) ++ special ++ extra
+        val lons = rings.flatMap(_.map(_._1)) ++ special ++ extra
+        lats.forall(lat => lons.forall(lon =>
+          index.contains(lon, lat) == Geo.containsMulti(rings)(lon, lat)))
     })
   }
 

@@ -75,23 +75,31 @@ class ServiceLoopSpec extends SparkSpec {
     val clock = new VirtualClock(0L)
     val layout = graft.sources.RasterBinarySink.Layout(
       latMin = -10.0, latMax = 9.0, lonMin = -15.0, lonMax = 14.0)
+    val layers = registry :+ DatasetDef("grid-quantity-anomaly", "A", "mm", "mm", anomaly = true)
 
-    Cycle.run(root, src, registry, clock, writeOutputs = true,
+    Cycle.run(root, src, layers, clock, writeOutputs = true,
       binaryLayout = Some(layout)).get
 
-    val rasterDir = new java.io.File(s"$root/rasters/grid_quantity_mean")
-    rasterDir.isDirectory shouldBe true
-    val bins = rasterDir.listFiles().filter(_.getName.endsWith(".bin"))
-    bins.length shouldBe 1 // one month landed → one layer raster
-    val (w, h, arr) = graft.sources.RasterBinarySink.read(bins.head.getPath)
-    (w, h) shouldBe (30, 20)
-    // the parquet landing and the raster carry the same number of live cells
-    val live = spark.read.parquet(s"$root/outputs/grid_quantity_mean")
-      .where(org.apache.spark.sql.functions.col("value").isNotNull).count()
-    arr.count(!_.isNaN).toLong shouldBe live
-    // sidecars present
-    rasterDir.listFiles().map(_.getName).count(_.endsWith(".hdr")) shouldBe 1
-    rasterDir.listFiles().map(_.getName).count(_.endsWith(".metadata.json")) shouldBe 1
+    // one export call, one sub-directory per layer, one month landed →
+    // one file set per layer
+    new java.io.File(s"$root/rasters").list().sorted shouldBe
+      Array("grid_quantity_anomaly", "grid_quantity_mean")
+    layers.foreach { d =>
+      val rasterDir = new java.io.File(s"$root/rasters/${d.layerName}")
+      rasterDir.list().sorted shouldBe
+        Seq(".bin", ".hdr", ".metadata.json", ".tif").map("A_1995-01-01-00-00-00" + _).sorted.toArray
+      val (w, h, arr) = graft.sources.RasterBinarySink.read(s"$rasterDir/A_1995-01-01-00-00-00.bin")
+      (w, h) shouldBe (30, 20)
+      // the parquet landing and the raster carry the same live cells
+      val live = spark.read.parquet(s"$root/outputs/${d.layerName}")
+        .where(org.apache.spark.sql.functions.col("value").isNotNull)
+        .select("value").collect().map(_.getDouble(0).toFloat).sorted
+      arr.filterNot(_.isNaN).sorted shouldBe live
+      // the .tif holds the same grid, nodata where the .bin reads NaN
+      val tif = graft.sources.GeoTiff.decode(
+        Files.readAllBytes(java.nio.file.Paths.get(s"$rasterDir/A_1995-01-01-00-00-00.tif")))
+      tif.values.toSeq shouldBe arr.map(v => if (v.isNaN) tif.nodata.get else v).toSeq
+    }
     grid.unpersist()
   }
 

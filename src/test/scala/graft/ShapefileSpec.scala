@@ -85,6 +85,36 @@ class ShapefileSpec extends AnyFunSuite with Matchers {
     n should (be > 1000L and be < 9000L)
   }
 
+  test("band index equals Geo.containsMulti at every 0.25° cell centre of the reference AOI") {
+    // the reference's ERA5 AOI [N 37, W -21.36, S -39.34, E 65.49] as
+    // 348 x 306 cell centres from (37.0, -21.25), in integer millidegrees
+    val ringSeq = rings.toSeq
+    val index = graft.functions.GeoContains.index(ringSeq)
+    var inside = 0
+    for (j <- 0 until 306; i <- 0 until 348) {
+      val lat = (37000 - j * 250) / 1000.0
+      val lon = (-21250 + i * 250) / 1000.0
+      val want = Geo.containsMulti(ringSeq)(lon, lat)
+      withClue(s"($lon, $lat): ")(index.contains(lon, lat) shouldBe want)
+      if (want) inside += 1
+    }
+    inside should (be > 10000 and be < 348 * 306)
+  }
+
+  test("st_contains rejects a ring with a non-finite vertex latitude") {
+    val spark = TestSession.spark
+    import spark.implicits._
+    Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity).foreach { y =>
+      val ring: Geo.Ring = Array((0.0, 0.0), (4.0, y), (4.0, 4.0), (0.0, 0.0))
+      val e = the[IllegalArgumentException] thrownBy graft.functions.GeoContains.index(Seq(ring))
+      e.getMessage should include("non-finite latitude")
+      the[IllegalArgumentException] thrownBy spark.range(1)
+        .selectExpr("0.5 AS lon", "0.5 AS lat")
+        .where(graft.functions.GeoContains(Seq(ring))($"lon", $"lat")) should have message
+        e.getMessage
+    }
+  }
+
   test("st_contains keeps the filter inside WholeStageCodegen (no ScalaUDF stage break)") {
     val spark = TestSession.spark
     import spark.implicits._
